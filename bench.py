@@ -51,8 +51,8 @@ BENCH_QUERIES = [
     # (both oracled) so regressions across operator classes are visible
     "chunk_documents",
     "embedding_near_dups",
-    # the end-to-end curation composition (gate-first, Arrow dedup —
-    # the production path IS the contract path since round 4)
+    # the end-to-end curation composition (gate-first, then the one
+    # MinHash LSH the oracle replays)
     "curate",
     # round 4: the remaining operator classes — distributed prefix-sum
     # packing, explode-agg repetition signals, iterative CC joins,
@@ -82,21 +82,6 @@ BENCH_QUERIES = [
 ]
 
 
-def _q_minhash_dedup_fast(spark, sf_dir):
-    """Throughput twin of the contract's portable minhash_dedup: the
-    Arrow/numpy signature path (operators/dedup.py minhash_dedup).
-    The contract query uses the md5-portable construction so DuckDB
-    can hash-check the survivor set; THIS is what ships in the hot
-    path, so THIS is what the bench times (tests assert the two
-    survivor sets agree)."""
-    from vision_parse_spark.operators.dedup import minhash_dedup
-
-    return minhash_dedup(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-    ).select("doc_id")
-
-
 def _q_embedding_near_dups_fast(spark, sf_dir):
     """Throughput twin of the contract's embedding_near_dups: same
     hyperplane buckets, within-bucket verify as one normalized matmul
@@ -115,28 +100,8 @@ def _q_embedding_near_dups_fast(spark, sf_dir):
         .select("id_a", "id_b")
 
 
-def _q_dup_clusters_fast(spark, sf_dir):
-    """Throughput twin of the contract's dup_clusters: the same
-    min-label-propagation + pointer-jumping clustering, fed by the
-    Arrow-path LSH pairs (minhash_lsh_pairs) instead of the portable
-    md5 construction (which drags shingle arrays through the bucket
-    join and exists only for the DuckDB replay)."""
-    from vision_parse_spark.operators.dedup import (
-        dup_clusters,
-        minhash_lsh_pairs,
-    )
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .select("doc_id", "text")
-    return dup_clusters(minhash_lsh_pairs(d)).select("doc_id", "cluster_id")
-
-
 BENCH_OVERRIDES = {
-    "minhash_dedup": _q_minhash_dedup_fast,
     "embedding_near_dups": _q_embedding_near_dups_fast,
-    "dup_clusters": _q_dup_clusters_fast,
-    # curate: no override since round 4 — the production composition
-    # (gate-first, Arrow dedup) is what the contract query runs
 }
 
 

@@ -1,17 +1,22 @@
 """Dedup operator tests with planted duplicates — exact, n-gram
 jaccard, MinHash+LSH, SimHash."""
 
+import itertools
+
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from vision_parse_spark.operators.dedup import (
+    _PRIME,
     exact_dedup,
+    make_minhash_portable_udf,
     minhash_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_adjacent,
     simhash_near_dups,
-    with_minhash,
+    with_minhash_portable,
     with_shingles,
 )
 
@@ -53,20 +58,29 @@ def test_shingles_short_text(spark):
     assert with_shingles(df, "text", 3).first().shingles == ["a b"]
 
 
+def _signatures(docs) -> list[dict]:
+    """doc_id -> 32-perm signature, from the Catalyst reference and
+    from the Arrow kernel the LSH ships."""
+    udf = make_minhash_portable_udf(32)
+    arrow = docs.select("doc_id", udf(F.col("text")).alias("minhash"))
+    return [{r.doc_id: r.minhash for r in sig.collect()}
+            for sig in (with_minhash_portable(docs, num_perm=32), arrow)]
+
+
 def test_minhash_signature_shape(spark, docs):
-    row = with_minhash(docs, num_perm=32).first()
-    assert len(row.minhash) == 32
-    assert all(v >= 0 for v in row.minhash)
+    for sigs in _signatures(docs):
+        for sig in sigs.values():
+            assert len(sig) == 32
+            assert all(0 <= v < _PRIME for v in sig)
 
 
 def test_minhash_identical_texts_identical_signatures(spark, docs):
-    rows = {r.doc_id: r.minhash
-            for r in with_minhash(docs, num_perm=32).collect()}
-    assert rows[0] == rows[1]
-    # near-dup shares most mins, different doc shares few
-    agree_near = sum(a == b for a, b in zip(rows[0], rows[2]))
-    agree_other = sum(a == b for a, b in zip(rows[0], rows[3]))
-    assert agree_near > agree_other
+    for rows in _signatures(docs):
+        assert rows[0] == rows[1]
+        # near-dup shares most mins, different doc shares few
+        agree_near = sum(a == b for a, b in zip(rows[0], rows[2]))
+        agree_other = sum(a == b for a, b in zip(rows[0], rows[3]))
+        assert agree_near > agree_other
 
 
 def test_minhash_lsh_pairs_finds_near_dup(spark, docs):
@@ -86,6 +100,61 @@ def test_minhash_dedup_survivors(spark, docs):
     assert 1 not in surv      # exact dup dropped
     assert 2 not in surv      # near dup dropped
     assert {3, 4} <= surv
+
+
+def _controlled_jaccard_pairs(n_pairs: int = 300, seed: int = 11):
+    """Rows ``(doc_id, text)`` of ``n_pairs`` document pairs (ids 2p,
+    2p + 1) with planned 3-shingle Jaccard in [0.3, 0.9], plus the
+    exact Jaccard of every pair.  Every token is unique to its pair,
+    so documents of different pairs share no shingle.  A pair shares
+    one run of tokens: ``m + 2`` shared tokens give ``m`` shared
+    shingles out of ``n - 2`` per document."""
+    rng = np.random.default_rng(seed)
+    tok = (f"w{i}" for i in itertools.count())
+    rows, jac = [], {}
+    for p in range(n_pairs):
+        n = int(rng.integers(30, 80))
+        j = rng.uniform(0.3, 0.9)
+        m = round(2 * j * (n - 2) / (1 + j))
+        shared = [next(tok) for _ in range(m + 2)]
+        a = shared + [next(tok) for _ in range(n - m - 2)]
+        b = [next(tok) for _ in range(n - m - 2)] + shared
+        sa, sb = (set(zip(t, t[1:], t[2:])) for t in (a, b))
+        jac[(2 * p, 2 * p + 1)] = len(sa & sb) / len(sa | sb)
+        rows += [(2 * p, " ".join(a)), (2 * p + 1, " ".join(b))]
+    return rows, jac
+
+
+def test_minhash_lsh_recall_on_controlled_jaccard_pairs(spark):
+    """The 16 x 2 banding makes a pair a candidate with probability
+    1 - (1 - J^2)^16.  Over this fixture that predicts 0.27 missed
+    pairs at J >= 0.5 and 0.015 at J >= 0.6; a 16 x 4 banding of 64
+    perms predicts 17 and 3.2.  The fixture holds one pair at
+    J = 0.639 whose 14 agreeing signature rows all fall in different
+    bands, so the misses are bounded rather than required to be
+    zero.  The exact verify returns no pair below the threshold."""
+    rows, jac = _controlled_jaccard_pairs()
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {(r.id_a, r.id_b): r.jaccard
+           for r in minhash_lsh_pairs(df).collect()}
+    assert sum(j >= 0.6 for j in jac.values()) > 100
+    missed = {p: j for p, j in jac.items() if j >= 0.5 and p not in got}
+    assert len(missed) <= 2, missed
+    assert sum(j >= 0.6 for j in missed.values()) <= 1, missed
+    for p, j in got.items():
+        assert p in jac and jac[p] >= 0.5
+        assert j == round(jac[p], 6)
+
+
+def test_minhash_dedup_and_curate_release_caches(spark, docs):
+    """No persisted frame outlives the LSH: after minhash_dedup and
+    curate run to completion the session's cache manager is empty."""
+    from vision_parse_spark.operators.curation import curate
+
+    spark.catalog.clearCache()
+    minhash_dedup(docs).collect()
+    curate(docs).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_ngram_jaccard_adjacent(spark, docs):
@@ -161,45 +230,6 @@ def test_simhash_deterministic(spark, docs):
     a = docs.select(simhash64(F.col("text")).alias("s")).collect()
     b = docs.select(simhash64(F.col("text")).alias("s")).collect()
     assert [r.s for r in a] == [r.s for r in b]
-
-
-def test_portable_and_fast_minhash_survivors_agree(spark):
-    """The contract's md5-portable LSH pipeline and the Arrow/numpy
-    throughput path implement the same construction (32-bit affine
-    perms over distinct 3-shingles, banded buckets, jaccard>=0.5
-    verify); on the driver corpus their survivor sets must agree —
-    both constructions catch the same verified near-dup pairs."""
-    from vision_parse_spark.operators.dedup import (
-        minhash_dedup,
-        minhash_dedup_portable,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    fast = {r[0] for r in minhash_dedup(docs).select("doc_id").collect()}
-    portable = {r[0] for r in
-                minhash_dedup_portable(docs).select("doc_id").collect()}
-    assert fast == portable
-
-
-def test_portable_and_fast_minhash_agree_on_gated_subset(spark):
-    """Same equality over an arbitrary SUBSET of the corpus — the
-    property curate() relies on since round 4 (production composition
-    runs the Arrow path over gate survivors, the DuckDB oracle replays
-    the portable construction over the same gated set)."""
-    from vision_parse_spark.operators.dedup import (
-        minhash_dedup,
-        minhash_dedup_portable,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text").filter("doc_id % 4 != 1")
-    fast = {r[0] for r in minhash_dedup(docs).select("doc_id").collect()}
-    portable = {r[0] for r in
-                minhash_dedup_portable(docs).select("doc_id").collect()}
-    assert fast == portable
 
 
 def test_simhash_production_equals_portable(spark, docs):

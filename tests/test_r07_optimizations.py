@@ -190,18 +190,28 @@ def test_dup_clusters_evaluates_pairs_input_once(spark):
     """The symmetric+self-loop star edges are built with ONE explode
     pass; the old 3-branch union evaluated the (possibly expensive,
     non-materialized) pairs subtree once per branch inside the
-    distinct job.  Pin single evaluation with an accumulator-
-    instrumented input."""
-    import pandas as pd
+    distinct job.  Pin single evaluation with an instrumented input
+    that records the (stage, partition) of every task it runs in: one
+    evaluation of a 2-partition input is exactly 2 tasks, a union
+    branch or a second job adds more, and a retried task repeats its
+    own (stage, partition), so retries cannot change the count."""
+    from pyspark import AccumulatorParam, TaskContext
 
     from vision_parse_spark.operators.dedup import dup_clusters
 
-    acc = spark.sparkContext.accumulator(0)
+    class SetParam(AccumulatorParam):
+        def zero(self, value):
+            return set()
+
+        def addInPlace(self, a, b):
+            return a | b
+
+    tasks = spark.sparkContext.accumulator(set(), SetParam())
 
     def bump(batches):
-        for pdf in batches:
-            acc.add(len(pdf))
-            yield pdf
+        ctx = TaskContext.get()
+        tasks.add({(ctx.stageId(), ctx.partitionId())})
+        yield from batches
 
     # two components: {1,2,3} and {10,11}
     pairs = spark.createDataFrame(
@@ -210,9 +220,9 @@ def test_dup_clusters_evaluates_pairs_input_once(spark):
     got = {r["doc_id"]: r["cluster_id"]
            for r in dup_clusters(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-    # every input row crossed the instrumented kernel exactly once
-    assert acc.value == 3, (
-        f"pairs input evaluated {acc.value / 3:.1f}x (expected 1x)")
+    assert len(tasks.value) == 2, (
+        f"pairs input ran in tasks {sorted(tasks.value)} "
+        f"(expected 2: one evaluation of 2 partitions)")
 
 
 # --- end-of-round wave: GD loop partitioning invariance -------------
@@ -245,10 +255,17 @@ def test_quality_fit_invariant_to_loop_partitioning(spark):
 
 # --- end-of-round wave: size-guarded scan rebalance -----------------
 
-def test_scan_rebalance_size_guard(spark, monkeypatch):
+def test_scan_rebalance_size_guard(spark, monkeypatch, tmp_path):
     """_tr repartitions an unsplittable scan only when the file is
     big enough that serializing its per-row work beats the exchange;
-    below the threshold the read stays at its natural partitioning."""
+    below the threshold the read stays at its natural partitioning.
+    The probes are cached per (path, mtime): a source rewritten
+    larger is measured again."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     import __spark_entry__ as em
 
     sf = "/root/testdata/sf0.001"
@@ -261,4 +278,23 @@ def test_scan_rebalance_size_guard(spark, monkeypatch):
     monkeypatch.setattr(em, "_REBALANCE_MIN_BYTES", 0)
     p = spark.sparkContext.defaultParallelism
     assert em._tr(spark, sf, "documents").rdd.getNumPartitions() == p
+
+    # rewrite one file in place, from below the threshold to above it
+    path = tmp_path / "documents.parquet"
+
+    def write(n_rows: int, mtime: int) -> int:
+        pq.write_table(pa.table({
+            "doc_id": list(range(n_rows)),
+            "text": [f"document number {i} " * 8 for i in range(n_rows)],
+        }), path)
+        os.utime(path, ns=(mtime, mtime))
+        return os.path.getsize(path)
+
+    small = write(10, 10**18)
+    monkeypatch.setattr(em, "_REBALANCE_MIN_BYTES", small + 1)
+    assert em._tr(spark, str(tmp_path), "documents") \
+        .rdd.getNumPartitions() == 1
+    assert write(20000, 10**18 + 10**9) > small + 1
+    assert em._tr(spark, str(tmp_path), "documents") \
+        .rdd.getNumPartitions() == p
     em._SCAN_PARTS_CACHE.clear()

@@ -92,13 +92,8 @@ def test_curate_gate_first_keeps_representative(spark):
     assert out == {1}
 
 
-def test_curate_full_composition(spark):
-    """curate_full() chains all seven stages: each crafted doc is
-    dropped by exactly one stage, the embedding-less doc passes the
-    SemDeDup stage untouched (anti-join drop semantics), and the
-    survivors come back span-normalized and PII-scrubbed."""
-    from vision_parse_spark.operators.curation import curate_full
-
+def _curate_full_inputs(spark):
+    """(docs, eval, embeddings) with one crafted doc per stage."""
     good1 = ("The quick brown fox jumps over the lazy dog and then "
              "rests in the shade of a tall tree for a while. "
              "It is a calm afternoon in the forest and the animals "
@@ -142,11 +137,41 @@ def test_curate_full_composition(spark):
          (4, basis[4]), (5, basis[5]), (6, basis[6]), (7, basis[7])],
         ["vec_id", "embedding"])
 
+    return df, ev, emb
+
+
+def test_curate_full_composition(spark):
+    """curate_full() chains all seven stages: each crafted doc is
+    dropped by exactly one stage, the embedding-less doc passes the
+    SemDeDup stage untouched (anti-join drop semantics), and the
+    survivors come back span-normalized and PII-scrubbed."""
+    from vision_parse_spark.operators.curation import curate_full
+
+    df, ev, emb = _curate_full_inputs(spark)
     out = {r.doc_id: r.text
            for r in curate_full(df, ev, emb,
                                 sem_k=2, sem_iters=1).collect()}
     assert set(out) == {1, 2, 8}
     # span stage rewrites survivors into normalized token space
+    good2 = df.filter("doc_id = 2").first().text
     assert out[2] == " ".join(good2.lower().split())
     # PII scrub runs over the normalized text
     assert "<EMAIL>" in out[1] and "admin@example.com" not in out[1]
+
+
+def test_curate_full_without_embedding_coverage(spark):
+    """An embeddings table that covers no document leaves SemDeDup
+    nothing to cluster: every document passes the stage, the same
+    rows as with a cosine threshold no pair can reach."""
+    from pyspark.sql import functions as F
+
+    from vision_parse_spark.operators.curation import curate_full
+
+    df, ev, emb = _curate_full_inputs(spark)
+    elsewhere = emb.withColumn("vec_id", F.col("vec_id") + 1000)
+    got = {tuple(r) for r in curate_full(df, ev, elsewhere).collect()}
+    want = {tuple(r) for r in curate_full(df, ev, emb, sem_k=2,
+                                          sem_iters=1,
+                                          sem_threshold=2.0).collect()}
+    assert got == want
+    assert {r[0] for r in got} == {1, 2, 3, 8}

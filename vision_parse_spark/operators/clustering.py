@@ -91,11 +91,13 @@ def kmeans_fit(df: DataFrame, k: int = 8, iters: int = 2,
     if dim is None:
         first = data.select(F.size("_v")).first()
         if first is None:
+            data.unpersist()
             raise ValueError("kmeans_fit: empty input")
         dim = first[0]
 
     seed_rows = data.orderBy(id_col).limit(k).collect()
     if len(seed_rows) < k:
+        data.unpersist()
         raise ValueError(f"kmeans_fit: k={k} but only {len(seed_rows)} rows")
     centroids = [list(r["_v"]) for r in seed_rows]
 
@@ -211,6 +213,8 @@ def semdedup(df: DataFrame, k: int = 8, iters: int = 2,
     if verify not in ("arrow", "portable"):
         raise ValueError(f"semdedup: verify must be 'arrow' or "
                          f"'portable', got {verify!r}")
+    if df.isEmpty():  # nothing to cluster, so nothing is dropped
+        return df.select(id_col)
     centroids, data = kmeans_fit(df, k=k, iters=iters, id_col=id_col,
                                  vec_col=vec_col, dim=dim)
     if verify == "arrow":

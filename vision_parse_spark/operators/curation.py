@@ -17,11 +17,10 @@ replays the full pipeline end to end.
 Scale notes: the two filter gates are semi-joins against narrow
 aggregates that prune the corpus BEFORE the LSH shuffle (the only
 heavy exchange) — the dedup stage therefore reads ONLY gate
-survivors, on the Arrow/numpy signature path (``minhash_dedup``, the
-throughput construction; the portable md5 twin exists solely so the
-DuckDB oracle can replay the pipeline — their survivor-set equality
-is pytest-asserted).  The scrub is a codegen'd Project over dedup
-survivors only.  Filter order is the plan: cheap-and-selective first.
+survivors, through the one MinHash LSH construction the DuckDB oracle
+replays (``minhash_dedup``).  The scrub is a codegen'd Project over
+dedup survivors only.  Filter order is the plan: cheap-and-selective
+first.
 """
 
 from __future__ import annotations
@@ -90,13 +89,8 @@ def curate(
     # at sf0.1).  localCheckpoint (not persist) so the context cleaner
     # reclaims it on GC.
     gated = gated.localCheckpoint(eager=True)
-    survivors = minhash_dedup(
-        gated, id_col, text_col, jaccard_threshold=jaccard_threshold,
-        # gated is an eager checkpoint of a join output — already
-        # spread over the shuffle partitions; the LSH's default
-        # source rebalance would just re-shuffle the texts
-        rebalance=False,
-    )
+    survivors = minhash_dedup(gated, id_col, text_col,
+                              jaccard_threshold=jaccard_threshold)
     return scrub_pii(survivors, text_col)
 
 
@@ -131,7 +125,7 @@ def curate_full(
                               shuffles for it
         -> SemDeDup           KMeans cells + tiled-matmul verify over
                               the gated docs' embeddings (Abbas 2023)
-        -> MinHash near-dedup LSH banding, Arrow signature path
+        -> MinHash near-dedup LSH banding, md5 Arrow signatures
         -> span removal       Lee-et-al frequent-span cut (rewrites
                               the text to normalized token space)
         -> PII scrub          one codegen'd Project
@@ -208,10 +202,7 @@ def curate_full(
     sem_surv = sem_surv.localCheckpoint(eager=True)
 
     deduped = minhash_dedup(sem_surv, id_col, text_col,
-                            jaccard_threshold=jaccard_threshold,
-                            # sem_surv is an eager checkpoint of a
-                            # join output — already well-partitioned
-                            rebalance=False)
+                            jaccard_threshold=jaccard_threshold)
     cut = remove_frequent_spans(deduped, n=span_n, max_df=span_max_df,
                                 id_col=id_col, text_col=text_col)
     return scrub_pii(
